@@ -44,7 +44,7 @@ import pandas as pd
 
 from ..functions import bm25
 from ..functions.smallfloat import LENGTH_TABLE, int_to_byte4
-from .search import TermSegPostings, _live_mask, _topk_merge
+from .search import TermSegPostings, _global_top_k, _live_mask, _topk_merge
 
 
 def _pseudo_stats(fields, term: str):
@@ -80,7 +80,6 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
     ``num_segments`` (checked per segment via global-id equality).
     Returns (doc_id, score float32, rank) like ``Searcher.search``.
     """
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     if not fields:
@@ -164,7 +163,4 @@ def combined_field_topk(spark, fields, term: str, k: int = 10,
     res = (pf.groupBy("seg_id")
            .cogroup(nf.groupBy("seg_id"))
            .applyInPandas(seg_combined, schema=out_schema))
-    top = (res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-           .withColumn("rank", F.row_number().over(
-               Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-    return top.select("doc_id", "score", "rank")
+    return _global_top_k(res, k)

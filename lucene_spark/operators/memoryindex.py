@@ -8,14 +8,19 @@ Monitor, ``streaming/monitor.py``, covers the batch form of that) and
 this is the standalone API for the latter.
 
 Single-field engine: ``add_field`` appends to the one content field;
-repeated calls concatenate with a +1 position gap, the analyzer's
-position-increment-gap role (``MemoryIndex.java`` keeps per-field token
+repeated calls concatenate with a position gap of 0, the reference's
+default ``Analyzer.getPositionIncrementGap``, so a phrase may span two
+``add_field`` texts (``MemoryIndex.java`` keeps per-field token
 streams; we have one field). Scoring is the same float32-exact BM25 /
 Similarity chain as the full engine, with the single-doc collection
 stats the reference exposes through its MemoryIndexReader (docCount=1,
 df∈{0,1}, avgdl = the doc's own length) — verified by sharing the
 :class:`lucene_spark.oracle.OracleIndex` kernel, which is
-differential-tested against the Spark engine everywhere.
+differential-tested against the Spark engine everywhere, so every query
+family the engine supports works. ``freeze()`` makes the instance
+immutable (the reference's frozen mode rejects further addField);
+``reset()`` clears and unfreezes it for reuse. The analyzer chain
+accepts the same knobs as ``OracleIndex.build``.
 """
 
 from __future__ import annotations
@@ -28,25 +33,33 @@ from ..plans.query import Query
 class MemoryIndex:
     """One-document index; queries score against it directly."""
 
-    def __init__(self, stopwords: frozenset[str] = frozenset(),
-                 stemmer: str | None = None):
+    def __init__(self, text: str | None = None, **analyzer_kwargs):
         self._parts: list[str] = []
-        self._stopwords = stopwords
-        self._stemmer = stemmer
+        self._kwargs = analyzer_kwargs
         self._idx: OracleIndex | None = None
+        self._frozen = False
+        if text is not None:
+            self.add_field(text)
 
     def add_field(self, text: str) -> "MemoryIndex":
-        """Append analyzed text to the document (chainable)."""
+        """Append analyzed text to the document (chainable). Like the
+        reference, adding to a frozen index raises."""
+        if self._frozen:
+            raise ValueError("cannot add fields to a frozen MemoryIndex")
         if text:
             self._parts.append(text)
         self._idx = None
         return self
 
+    def freeze(self) -> "MemoryIndex":
+        """``MemoryIndex.freeze()``: no further mutation."""
+        self._frozen = True
+        return self
+
     def _index(self) -> OracleIndex:
         if self._idx is None:
-            self._idx = OracleIndex.build(
-                [(0, " ".join(self._parts))],
-                stopwords=self._stopwords, stemmer=self._stemmer)
+            self._idx = OracleIndex.build([(0, " ".join(self._parts))],
+                                          **self._kwargs)
         return self._idx
 
     def search(self, query: "Query | str", k1: float | None = None,
@@ -55,7 +68,8 @@ class MemoryIndex:
         match) — ``MemoryIndex.search(Query)``'s float contract. String
         queries go through the classic parser."""
         if isinstance(query, str):
-            query = parse(query, stopwords=self._stopwords)
+            query = parse(query,
+                          stopwords=self._kwargs.get("stopwords", frozenset()))
         kwargs = {}
         if k1 is not None:
             kwargs["k1"] = k1
@@ -84,7 +98,9 @@ class MemoryIndex:
         return sorted(self._index().postings)
 
     def reset(self) -> "MemoryIndex":
-        """Clear the document for reuse (``MemoryIndex.reset``)."""
+        """Clear the document for reuse (``MemoryIndex.reset``); like
+        the reference, this also unfreezes it."""
         self._parts.clear()
         self._idx = None
+        self._frozen = False
         return self

@@ -726,9 +726,13 @@ class TermSegPostings:
 class _SegContext:
     def __init__(self, postings_rows: dict[str, dict], norm_bytes: np.ndarray,
                  cache: np.ndarray, sim: Similarity | None = None,
-                 live: np.ndarray | None = None):
+                 live: np.ndarray | None = None, seg_id: int | None = None,
+                 gids: np.ndarray | None = None):
         self.rows = postings_rows
         self.norms = norm_bytes
+        self.seg_id = seg_id
+        #: local docID → global doc_id
+        self.gids = gids
         self.cache = cache
         self.sim = sim or BM25Similarity()
         #: liveDocs bitset (None = no deletes). Applied at COLLECTION time
@@ -1428,6 +1432,18 @@ def _topk_merge(gids: np.ndarray, scores32: np.ndarray, k: int):
     return gids[order], scores32[order]
 
 
+def _global_top_k(df, k: int):
+    """The global merge of every ranked entry point: ``ORDER BY score
+    DESC, doc_id ASC LIMIT k`` (one TakeOrderedAndProject; reference
+    ``search/TopDocs.java:71-90``), ranked 1..k."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    order = (F.desc("score"), F.asc("doc_id"))
+    return (df.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+            .select("doc_id", "score", "rank"))
+
+
 def score_segment(compiled, postings_rows: dict[str, dict],
                   norm_bytes: np.ndarray, gids: np.ndarray,
                   cache: np.ndarray, k: int, mode: str,
@@ -1804,9 +1820,60 @@ class Searcher:
         dfs, ttfs = self._global_stats(query.all_terms())
         compiled = compile_query(query, dfs, self.doc_count, self.similarity,
                                  ttfs, self.sum_ttf)
-        avgdl = bm25.avg_field_length(self.sum_ttf, self.doc_count)
-        cache = self.similarity.norm_cache(avgdl)
-        return compiled, cache
+        return compiled, self._norm_cache()
+
+    def _norm_cache(self) -> np.ndarray:
+        return self.similarity.norm_cache(
+            bm25.avg_field_length(self.sum_ttf, self.doc_count))
+
+    # -- per-segment execution ---------------------------------------------
+    def _per_segment(self, postings, kernel, schema: str):
+        """Run ``kernel`` once per segment: the one place a query crosses
+        from the JVM into Python. ``postings`` is an already-filtered
+        postings scan; it cogroups with the segment norms on ``seg_id``
+        and ``kernel(ctx)`` gets a :class:`_SegContext` holding the
+        segment's term → row map, norm bytes, global doc ids, liveDocs
+        and ``seg_id``. The kernel returns a pandas frame matching
+        ``schema``, or None for no rows; segments without postings emit
+        nothing."""
+        sim = self.similarity
+        deletes = self.deletes
+        cache = self._norm_cache()
+
+        def run(key, postings_pdf, norms_pdf):
+            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
+                return pd.DataFrame()
+            seg_id = int(key[0])
+            norm_bytes = np.frombuffer(norms_pdf["norm_bytes"].iat[0],
+                                       dtype=np.uint8)
+            gids = np.frombuffer(norms_pdf["global_doc_ids"].iat[0],
+                                 dtype="<i8")
+            rows = dict(zip(postings_pdf["term"],
+                            postings_pdf.to_dict("records")))
+            ctx = _SegContext(rows, norm_bytes, cache, sim,
+                              live=_live_mask(deletes, seg_id,
+                                              len(norm_bytes)),
+                              seg_id=seg_id, gids=gids)
+            out = kernel(ctx)
+            return pd.DataFrame() if out is None else out
+
+        run.__name__ = kernel.__name__  # plans and Spark UI show the kernel
+        return (postings.groupBy("seg_id")
+                .cogroup(self.norms.groupBy("seg_id"))
+                .applyInPandas(run, schema=schema))
+
+    def _drop_deleted(self, df):
+        """``df`` without its tombstoned ``(seg_id, local_doc_id)`` rows:
+        one broadcast left-anti join, nothing when the index has no
+        deletes."""
+        if not self.deletes:
+            return df
+        from pyspark.sql import functions as F
+        tomb = self.spark.createDataFrame(
+            [(int(s), int(d)) for s, v in self.deletes.items() for d in v],
+            "seg_id int, local_doc_id int")
+        return df.join(F.broadcast(tomb), on=["seg_id", "local_doc_id"],
+                       how="left_anti")
 
     # -- search ------------------------------------------------------------
     def point_range_docs(self, pr):
@@ -1822,13 +1889,7 @@ class Searcher:
             dv = dv.filter(F.col("value") >= pr.lower)
         if pr.upper is not None:
             dv = dv.filter(F.col("value") <= pr.upper)
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select(
+        return self._drop_deleted(dv).select(
             "doc_id",
             F.lit(float(np.float32(pr.boost))).cast("float")
              .alias("score"))
@@ -1898,7 +1959,6 @@ class Searcher:
         semi/anti-join on doc_id, and each MUST point adds its constant
         score — one double-precision sum, one float32 cast
         (ConjunctionScorer's score chain)."""
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         const = float(sum(np.float64(np.float32(p.boost))
@@ -1927,17 +1987,13 @@ class Searcher:
             base = base.filter(
                 (F.col("score") < s0)
                 | ((F.col("score") == s0) & (F.col("doc_id") > d0)))
-        top = (base.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-               .withColumn("rank", F.row_number().over(
-                   Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-        return top.select("doc_id", "score", "rank")
+        return _global_top_k(base, k)
 
     def search(self, query, k: int = 10, mode: str = "auto",
                after: tuple[float, int] | None = None):
         """Returns a DataFrame (doc_id, score float32, rank) of the global
         top-k; ``after=(score, doc_id)`` pages past a previous hit
         (searchAfter: ``search/IndexSearcher.java:490-546``)."""
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         pointsplit = self._split_point_clauses(query)
@@ -1945,42 +2001,20 @@ class Searcher:
             return self._search_points(*pointsplit, k=k, mode=mode,
                                        after=after)
 
-        compiled, cache = self._compile(query)
-        sim = self.similarity
-        deletes = self.deletes
-        spark = self.spark
-        out_schema = "seg_id int, doc_id long, score float, seg_hits long"
+        compiled, _ = self._compile(query)
+        out_schema = "doc_id long, score float"
         if compiled is None:
-            return spark.createDataFrame([], out_schema + ", rank int") \
-                        .select("doc_id", "score", "rank")
+            return self.spark.createDataFrame([], out_schema + ", rank int")
+
+        def seg_topk(ctx):
+            g, s, _ = score_segment(compiled, ctx.rows, ctx.norms, ctx.gids,
+                                    ctx.cache, k, mode, after, ctx=ctx)
+            return pd.DataFrame({"doc_id": g, "score": s.astype(np.float32)})
 
         terms = sorted(set(_compiled_terms(compiled)))
         pf = self.postings.filter(F.col("term").isin(terms))
-
-        def seg_topk(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return pd.DataFrame(columns=["seg_id", "doc_id", "score", "seg_hits"])
-            seg_id = int(key[0])
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,
-                              live=_live_mask(deletes, seg_id,
-                                              len(norm_bytes)))
-            g, s, hits = score_segment(compiled, rows, norm_bytes, gids,
-                                       cache, k, mode, after, ctx=ctx)
-            return pd.DataFrame({"seg_id": np.int32(seg_id), "doc_id": g,
-                                 "score": s.astype(np.float32),
-                                 "seg_hits": np.int64(hits)})
-
-        res = (pf.groupBy("seg_id")
-               .cogroup(self.norms.groupBy("seg_id"))
-               .applyInPandas(seg_topk, schema=out_schema))
-        top = (res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-               .withColumn("rank", F.row_number().over(
-                   Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-        return top.select("doc_id", "score", "rank")
+        res = self._per_segment(pf, seg_topk, out_schema)
+        return _global_top_k(res, k)
 
     def expand_terms(self, like: str | None = None, rlike: str | None = None,
                      fuzzy: tuple[str, int] | None = None,
@@ -2119,35 +2153,22 @@ class Searcher:
         aggregation."""
         from pyspark.sql import functions as F
 
-        compiled, cache = self._compile(query)
-        sim = self.similarity
-        deletes = self.deletes
+        compiled, _ = self._compile(query)
         out_schema = "doc_id long, score float"
         if compiled is None:
             return self.spark.createDataFrame([], out_schema)
-        terms = sorted(set(_compiled_terms(compiled)))
-        pf = self.postings.filter(F.col("term").isin(terms))
 
-        def seg_all(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                     "score": pd.Series([], dtype="float32")})
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,
-                              live=_live_mask(deletes, int(key[0]),
-                                              len(norm_bytes)))
-            mask, scores = _eval_range(compiled, ctx, 0, len(norm_bytes))
+        def seg_all(ctx):
+            mask, scores = _eval_range(compiled, ctx, 0, len(ctx.norms))
             if ctx.live is not None:
                 mask &= ctx.live
             lids = np.nonzero(mask)[0]
-            return pd.DataFrame({"doc_id": gids[lids],
+            return pd.DataFrame({"doc_id": ctx.gids[lids],
                                  "score": scores[lids].astype(np.float32)})
 
-        return (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-                .applyInPandas(seg_all, schema=out_schema))
+        terms = sorted(set(_compiled_terms(compiled)))
+        pf = self.postings.filter(F.col("term").isin(terms))
+        return self._per_segment(pf, seg_all, out_schema)
 
     def covering(self, clauses, min_match: int = 1, min_match_df=None):
         """CoveringQuery (reference ``sandbox/search/CoveringQuery.java:51``
@@ -2195,13 +2216,7 @@ class Searcher:
         a pushed IsNotNull scan of doc_meta, tombstones masked."""
         from pyspark.sql import functions as F
         dv = self.docvalues(field).where(F.col("value").isNotNull())
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select("doc_id")
+        return self._drop_deleted(dv).select("doc_id")
 
     def docvalues_in_set(self, field: str, values):
         """DocValuesNumbersQuery role (reference ``sandbox/search/
@@ -2213,13 +2228,7 @@ class Searcher:
         from pyspark.sql import functions as F
         vals = [int(v) for v in values]
         dv = self.docvalues(field).where(F.col("value").isin(vals))
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select("doc_id", "value")
+        return self._drop_deleted(dv).select("doc_id", "value")
 
     def payloads_for_query(self, query):
         """PayloadSpanUtil.getPayloadsForQuery (reference
@@ -2265,30 +2274,18 @@ class Searcher:
 
         walk(query)
         terms = sorted({t for s in specs for t in s})
-        deletes = self.deletes
         schema = "doc_id long, term string, pos int, payload float"
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                              "term": pd.Series([], dtype=object),
-                              "pos": pd.Series([], dtype="int32"),
-                              "payload": pd.Series([], dtype="float32")})
         if not terms:
-            return self.spark.createDataFrame(empty, schema)
-        pf = self.postings.filter(F.col("term").isin(terms))
+            return self.spark.createDataFrame([], schema)
         BIG = np.int64(1) << np.int64(32)
 
-        def seg_payloads(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return empty
-            nrow = norms_pdf.iloc[0]
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            live = _live_mask(deletes, int(key[0]), len(gids))
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
+        def seg_payloads(ctx):
+            live = ctx.live
             streams = {}
-            for t in {tt for s in specs for tt in s}:
-                r = rows.get(t)
-                if r is None:
+            for t in terms:
+                tp = ctx.tp(t)
+                if tp is None:
                     continue
-                tp = TermSegPostings(r)
                 pays = tp.payloads()
                 if pays is None:
                     raise ValueError("payloads_for_query over an index "
@@ -2332,15 +2329,15 @@ class Searcher:
                     out_p.append(p[sel])
                     out_y.append(y[sel])
             if not out_d:
-                return empty
+                return None
             return pd.DataFrame(
-                {"doc_id": gids[np.concatenate(out_d)],
+                {"doc_id": ctx.gids[np.concatenate(out_d)],
                  "term": np.concatenate(out_t),
                  "pos": np.concatenate(out_p).astype(np.int32),
                  "payload": np.concatenate(out_y).astype(np.float32)})
 
-        return (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-                .applyInPandas(seg_payloads, schema=schema))
+        pf = self.postings.filter(F.col("term").isin(terms))
+        return self._per_segment(pf, seg_payloads, schema)
 
     def docvalues_terms_in_set(self, field: str, values):
         """DocValuesTermsQuery (reference ``sandbox/search/
@@ -2355,13 +2352,7 @@ class Searcher:
               .select("seg_id", "local_doc_id", "doc_id",
                       F.col(field).cast("string").alias("value"))
               .where(F.col("value").isin(vals)))
-        if self.deletes:
-            tomb = self.spark.createDataFrame(
-                [(int(sg), int(d)) for sg, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            dv = dv.join(F.broadcast(tomb),
-                         on=["seg_id", "local_doc_id"], how="left_anti")
-        return dv.select("doc_id", "value")
+        return self._drop_deleted(dv).select("doc_id", "value")
 
     def high_freq_terms(self, num_terms: int = 100,
                         by: str = "df"):
@@ -2401,7 +2392,6 @@ class Searcher:
         the kernel output, the combine is a k-row left join, and the
         truncation is one TakeOrderedAndProject — no exchange beyond
         the second query's per-segment kernel."""
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         hits = first_pass.select("doc_id", F.col("score").alias("first_s"))
@@ -2416,10 +2406,7 @@ class Searcher:
                     + F.lit(float(weight))
                     * F.col("second_s").cast("double")).cast("float"))
             .otherwise(F.col("first_s")).alias("score"))
-        top = (combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(topn)
-               .withColumn("rank", F.row_number().over(
-                   Window.orderBy(F.desc("score"), F.asc("doc_id")))))
-        return top.select("doc_id", "score", "rank")
+        return _global_top_k(combined, topn)
 
     def sorted_top_k(self, k: int = 10, ascending: bool | None = None):
         """Early-terminating top-k by the index sort field (reference
@@ -2456,12 +2443,8 @@ class Searcher:
             wmap = F.create_map(*[F.lit(x) for kv in widen.items()
                                   for x in kv])
             cutoff = F.lit(k) + F.coalesce(wmap[F.col("seg_id")], F.lit(0))
-            tomb = self.spark.createDataFrame(
-                [(int(s), int(d)) for s, v in self.deletes.items()
-                 for d in v], "seg_id int, local_doc_id int")
-            cand = (cand.filter(F.col("local_doc_id") < cutoff)
-                    .join(F.broadcast(tomb),
-                          on=["seg_id", "local_doc_id"], how="left_anti"))
+            cand = self._drop_deleted(
+                cand.filter(F.col("local_doc_id") < cutoff))
         else:
             cand = cand.filter(F.col("local_doc_id") < k)
         from pyspark.sql import Window
@@ -2533,45 +2516,29 @@ class Searcher:
         union_terms = sorted({t for q in resolved.values()
                               for t in q.all_terms()})
         dfs, ttfs = self._global_stats(union_terms)
-        avgdl = bm25.avg_field_length(self.sum_ttf, self.doc_count)
-        sim = self.similarity
-        deletes = self.deletes
-        cache = sim.norm_cache(avgdl)
-        compiled = {qid: compile_query(q, dfs, self.doc_count, sim,
-                                       ttfs, self.sum_ttf)
+        compiled = {qid: compile_query(q, dfs, self.doc_count,
+                                       self.similarity, ttfs, self.sum_ttf)
                     for qid, q in resolved.items()}
         compiled = {qid: c for qid, c in compiled.items() if c is not None}
         out_schema = "query_id string, doc_id long, score float"
         if not compiled:
             return self.spark.createDataFrame([], out_schema + ", rank int") \
                 .select("query_id", "doc_id", "score", "rank")
-        pf = self.postings.filter(F.col("term").isin(union_terms))
 
-        def seg_many(key, postings_pdf, norms_pdf):
-            empty = pd.DataFrame({"query_id": pd.Series([], dtype="object"),
-                                  "doc_id": pd.Series([], dtype="int64"),
-                                  "score": pd.Series([], dtype="float32")})
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return empty
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,  # shared decode
-                              live=_live_mask(deletes, int(key[0]),
-                                              len(norm_bytes)))
+        def seg_many(ctx):  # one ctx: every query shares the block decode
             parts = []
             for qid, comp in compiled.items():
-                g, s, _ = score_segment(comp, rows, norm_bytes, gids,
-                                        cache, k, mode, ctx=ctx)
+                g, s, _ = score_segment(comp, ctx.rows, ctx.norms, ctx.gids,
+                                        ctx.cache, k, mode, ctx=ctx)
                 if len(g):
                     parts.append(pd.DataFrame({
                         "query_id": qid, "doc_id": g,
                         "score": s.astype(np.float32)}))
-            return pd.concat(parts, ignore_index=True) if parts else empty
+            return pd.concat(parts, ignore_index=True) if parts else None
 
-        res = (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-               .applyInPandas(seg_many, schema=out_schema))
+        res = self._per_segment(
+            self.postings.filter(F.col("term").isin(union_terms)),
+            seg_many, out_schema)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                    F.asc("doc_id"))
         return (res.withColumn("rank", F.row_number().over(w))
@@ -2689,30 +2656,18 @@ class Searcher:
         if isinstance(query, Q.Term) and not self.deletes \
                 and self.term_stats is not None:
             return self._global_dfs([query.term]).get(query.term, 0)
-        compiled, cache = self._compile(query)
-        sim = self.similarity
-        deletes = self.deletes
+        compiled, _ = self._compile(query)
         if compiled is None:
             return 0
-        terms = sorted(set(_compiled_terms(compiled)))
-        pf = self.postings.filter(F.col("term").isin(terms))
 
-        def seg_count(key, postings_pdf, norms_pdf):
-            if len(norms_pdf) == 0 or len(postings_pdf) == 0:
-                return pd.DataFrame({"hits": [0]})
-            nrow = norms_pdf.iloc[0]
-            norm_bytes = np.frombuffer(nrow["norm_bytes"], dtype=np.uint8)
-            gids = np.frombuffer(nrow["global_doc_ids"], dtype="<i8")
-            rows = {r["term"]: r for _, r in postings_pdf.iterrows()}
-            ctx = _SegContext(rows, norm_bytes, cache, sim,
-                              live=_live_mask(deletes, int(key[0]),
-                                              len(norm_bytes)))
-            _, _, hits = score_segment(compiled, rows, norm_bytes, gids,
-                                       cache, 1, "exhaustive", ctx=ctx)
+        def seg_count(ctx):
+            _, _, hits = score_segment(compiled, ctx.rows, ctx.norms, ctx.gids,
+                                       ctx.cache, 1, "exhaustive", ctx=ctx)
             return pd.DataFrame({"hits": [hits]})
 
-        res = (pf.groupBy("seg_id").cogroup(self.norms.groupBy("seg_id"))
-               .applyInPandas(seg_count, schema="hits long"))
+        terms = sorted(set(_compiled_terms(compiled)))
+        pf = self.postings.filter(F.col("term").isin(terms))
+        res = self._per_segment(pf, seg_count, "hits long")
         return int(res.agg(F.sum("hits")).collect()[0][0] or 0)
 
 

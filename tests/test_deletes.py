@@ -78,6 +78,49 @@ def test_count_excludes_deleted(spark, deleted_index, oracle_full):
     assert s.count(Q.Term(DEL_TERM)) == 0
 
 
+def test_all_kernel_entries_mask_deletes(spark, deleted_index, oracle_full):
+    """score_all, search_many and the classify term kernels never return
+    a tombstoned doc; surviving docs keep their exact pre-delete oracle
+    float32 scores (stats stay stale until merge)."""
+    from lucene_spark.operators.classify import (term_doc_pairs,
+                                                 term_doc_scores)
+
+    s = Searcher(spark, deleted_index)
+    gone = _deleted_doc_ids(oracle_full)
+    assert gone
+    queries = {"term": Q.Term(QUERY_TERM),
+               "or": Q.Or((Q.Term(QUERY_TERM), Q.Term(DEL_TERM))),
+               "del": Q.Term(DEL_TERM)}
+
+    def live_scores(q):
+        return {d: np.float32(sc) for d, sc in oracle_full.score(q).items()
+                if d not in gone}
+
+    for qid, q in queries.items():
+        got = {r["doc_id"]: np.float32(r["score"])
+               for r in s.score_all(q).collect()}
+        assert got == live_scores(q), qid
+
+    many = s.search_many(queries, k=10).collect()
+    for qid, q in queries.items():
+        got = [(r["doc_id"], np.float32(r["score"]))
+               for r in sorted(many, key=lambda r: r["rank"])
+               if r["query_id"] == qid]
+        want = [(d, np.float32(sc))
+                for d, sc in oracle_full.top_k(q, k=10 + len(gone))
+                if d not in gone][:10]
+        assert got == want, qid
+
+    terms = [QUERY_TERM, DEL_TERM]
+    pairs = {(r["term"], r["doc_id"])
+             for r in term_doc_pairs(s, terms).collect()}
+    assert pairs == {(t, d) for t in terms for d in live_scores(Q.Term(t))}
+    scored: dict = {}
+    for r in term_doc_scores(s, terms).collect():
+        scored.setdefault(r["term"], {})[r["doc_id"]] = np.float32(r["score"])
+    assert scored == {QUERY_TERM: live_scores(Q.Term(QUERY_TERM))}
+
+
 def test_update_documents(spark):
     """updateDocument role: replaced docs surface only with their new
     content; after force_merge the index equals a fresh oracle over the
